@@ -5,36 +5,13 @@ import org.apache.spark.sql.SparkSession
   *   - forces full evaluation with a noop-format write (Catalyst cannot
   *     prune projections/sorts away as it can under a bare count()),
   *   - one warm-up pass absorbs JVM/codegen cost,
-  *   - median of 3 timed runs,
+  *   - minimum of 3 timed runs (see the note at the timing loop),
   *   - failures are reported in an "errors" field, never as fake timings.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the default 100-entry generated-class cache thrashes across a
-      // 117-query inventory: the warmup pass evicts every earlier plan,
-      // so big plans re-janino-compile on every timed run and their
-      // medians measure compiler time, not plan cost (observed 2× on
-      // mv_firs_full: ~7s in-inventory vs 3.3s isolated)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Always sort-based shuffle (round-12): the bypass-merge writer
-      // opens one file PER REDUCE PARTITION per map task (32×32+ opens
-      // per exchange at local[32]) and executor thread dumps showed task
-      // time dominated by FileOutputStream.open0 on this filesystem; the
-      // sort path writes one data+index file per task. Above 200
-      // partitions Spark never bypasses anyway, so this is a NO-OP at
-      // cluster scale — parameterized for comparability (env override).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session()
 
     def exec(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()

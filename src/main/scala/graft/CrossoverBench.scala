@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental-refresh vs full-rebuild crossover measurement.
@@ -31,16 +31,7 @@ object CrossoverBench {
     val fractions = args.headOption
       .map(_.split(",").map(_.toDouble).toSeq)
       .getOrElse(Seq(0.01, 0.05, 0.10, 0.25, 0.50))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session()
 
     val dir = ScaleCanary.derived(spark, 10)
     def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
@@ -34,15 +33,7 @@ object Explain {
     val rest = args.filterNot(a => a == "--summary" || a == "--fallbacks")
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.01")
     val names = rest.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "1"))
-      .getOrCreate()
+    val spark = graft.core.Session()
     spark.sparkContext.setLogLevel("ERROR")
     val picked = SparkEntry.all.filter(q => names.isEmpty || names.contains(q.name))
     if (fallbacks) {

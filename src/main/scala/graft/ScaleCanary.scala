@@ -166,14 +166,7 @@ object ScaleCanary {
       if (sweep || deep100) 0 else args.headOption.map(_.toInt).getOrElse(20)
     val explicitNames: Option[Seq[String]] =
       if (!sweep && args.length > 1) Some(args(1).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+    val spark = graft.core.Session.builder()
       // zstd shuffle/spill compression (round-11): the 100× fat-MV runs
       // spill tens of GB; zstd roughly halves lz4's on-disk footprint for
       // the rendered-JSON gold rows at similar CPU. The common production

@@ -23,13 +23,7 @@ object QlShell {
     val args = rawArgs.filterNot(a => a == "--present" || a == "--mongo")
     val dir = args(0)
     def startSpark(): SparkSession = {
-      val s = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
+      val s = graft.core.Session()
       s.sparkContext.setLogLevel("ERROR")
       Udfs.register(s)
       s

@@ -36,10 +36,8 @@ object DocPipeline {
     base.unionByName(variants)
   }
 
-  /** dd31's tokenized corpus — shared with the canary probes
-    * (GrowthProbe, Dd31Profile) so a fixture change here is the ONLY
-    * place it can happen; the probes measure this pipeline by
-    * construction, not by copy. */
+  /** dd31's tokenized corpus — shared by dd31, dd75 (through
+    * [[dd31Hits]]) and dd103, so a fixture change happens in one place. */
   private[graft] def dd31Tok(s: SparkSession, dir: String): DataFrame =
     // fan the tokenized rows out before the 8-gram explode: the shingle
     // expansion is the pipeline's dominant per-row work and otherwise
@@ -1225,7 +1223,7 @@ object DocPipeline {
       // hashes (P ≈ pairs·2⁻⁹⁶) — and "appears in >1 distinct doc" is
       // min(doc)≠max(doc): one exchange with map-side combine instead of
       // countDistinct's double exchange. Fixture + diet live in
-      // dd31Tok/dd31Shingles/dd31Hits above, shared with the probes.
+      // dd31Tok/dd31Shingles/dd31Hits above, shared with dd75 and dd103.
       val hits = dd31Hits(s, dir)
       // Coverage by INTERVAL MERGE, not explode+distinct (round-11, from
       // the 100× stage profile): expanding every hit to its 8 positions

@@ -3,25 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all specs — one JVM-wide SparkSession (forked test
-  * JVM), UTC, small shuffle parallelism for test speed.
+/** Shared session for all specs — one JVM-wide session (forked test
+  * JVM) on the shared factory settings. Four cores, not the host's
+  * count, so test plans are the same on any host.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // sort-based shuffle always: one file per map task instead of one
-      // per reduce partition (no-op above 200 partitions; see Bench)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .appName("graft-test")
-      .getOrCreate()
+    val s = graft.core.Session(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
