@@ -37,8 +37,8 @@ object CrossoverBench {
     def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
 
     // gold v1, materialized once — refresh reads it from storage, like a
-    // real maintained table
-    val goldPath = "target/replay/crossover-gold"
+    // real maintained table, in the session's own warehouse dir
+    val goldPath = s"${spark.conf.get("spark.sql.warehouse.dir")}/crossover-gold"
     graft.queries.GoldMvFull
       .buildFirsFull(spark, dir, tbl("orders"), tbl("lineitem"))
       .write.mode("overwrite").parquet(goldPath)

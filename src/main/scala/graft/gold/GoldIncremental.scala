@@ -17,24 +17,18 @@ object GoldIncremental {
 
   /** @param goldPrev      current gold table (one row per parentKey)
     * @param changedKeys   frame holding the parent keys touched this run
-    * @param knownKeyCount distinct changed-key count when the caller
-    *                      already measured it (GoldStream computes it in
-    *                      the same job as its empty-batch gate) — skips
-    *                      this function's own count job
     * @param recompute     the gold pipeline, applied only to a key subset
     */
   def refresh(
       goldPrev: DataFrame,
       changedKeys: DataFrame,
-      parentKey: String,
-      knownKeyCount: Option[Long] = None)(
+      parentKey: String)(
       recompute: DataFrame => DataFrame): DataFrame = {
-    // NOT cached: refresh is called per micro-batch from the streaming
-    // maintainers, and a cache per call would leak storage entries for the
-    // stream's lifetime. The count is one extra slim-column job; the
-    // callers that can amortize it (GoldStream) persist their batch anyway.
+    // NOT cached: refresh is called per micro-batch from the funnel
+    // maintainer, and a cache per call would leak storage entries for the
+    // stream's lifetime. The count is one extra slim-column job.
     val keys = changedKeys.select(col(changedKeys.columns.head).as(parentKey)).distinct()
-    val nKeys = knownKeyCount.getOrElse(keys.count())
+    val nKeys = keys.count()
     val recomputed = recompute(keys)
     // Anti-join on the CHANGED keys, not on the recomputed rows: a changed
     // parent whose recompute yields zero rows (all child facts deleted / no

@@ -722,8 +722,9 @@ object GoldMvFull {
       // anti-join's key budget): at sf0.1 the write+read+full-GC costs
       // ~10 s against a 2.8 s lazy plan whose spill fits trivially, so
       // small scales keep the lazy shape — measured both ways, PLANS.md
-      // r11. Same wiped-at-start target/replay root as the streaming
-      // maintainers: repeated runs keep exactly ONE copy.
+      // r11. Same wiped-at-start per-session replay root as the
+      // streaming maintainers (Ingest.replayDir): repeated runs keep
+      // exactly ONE copy.
       // Size probe goes through the Hadoop FileSystem API (the same one
       // the scan uses), not java.io.File — a java.io probe reads 0 on
       // any non-local store and would silently pin the lazy shape.
@@ -738,8 +739,7 @@ object GoldMvFull {
         if (dirBytes(s"$dir/lineitem.parquet") < snapshotMinFactBytes)
           buildAccuseds(s, dir, liV1, liV1)
         else {
-          val snap = java.nio.file.Paths.get("target", "replay",
-            "mv_accuseds_incr_v1").toString
+          val snap = Ingest.replayDir(s, "mv_accuseds_incr_v1")
           buildAccuseds(s, dir, liV1, liV1).write.mode("overwrite").parquet(snap)
           System.gc() // let ContextCleaner reclaim the build's shuffle files
           s.read.parquet(snap)
@@ -776,7 +776,7 @@ object GoldMvFull {
       // point inside this function where the blocks are safely done).
       // The spill file costs the same single computation, pins no
       // executor memory, and overwrites itself on every invocation (same
-      // wiped target/replay root as the maintainers). The key set is
+      // wiped per-session replay root as the maintainers). The key set is
       // small by the refresh's own O(changed) contract.
       val expanded = graft.streaming.VersionedState.writeRead(
         liV1.select(col("l_orderkey"), col("l_suppkey"))
@@ -785,8 +785,7 @@ object GoldMvFull {
           .select(col("l_orderkey")).distinct()
           .unionByName(direct).distinct()
           .select(col("l_orderkey").as("crime_id")),
-        java.nio.file.Paths.get("target", "replay",
-          "mv_accuseds_incr_keys").toString)
+        Ingest.replayDir(s, "mv_accuseds_incr_keys"))
       graft.gold.GoldIncremental.refresh(goldPrev, expanded, "crime_id") { keys =>
         val k = keys.select(col("crime_id").as("ck"))
         // child rows pruned to the expanded keys; the HISTORY side must

@@ -17,14 +17,17 @@ object Ingest {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
 
-  /** Working dir for a replay-parity maintainer: rooted under target/ (so
-    * build cleaning removes it) and wiped at each invocation start, so
-    * repeated bench/verify runs keep exactly ONE copy of the versioned
-    * state on disk instead of leaking a temp dir per run. The returned
+  /** Working dir for a replay-parity maintainer: rooted under the
+    * session's warehouse dir, which `core.Session` makes fresh per
+    * session, so two runs never share (and wipe) each other's state. It
+    * is wiped at each invocation start, so repeated runs in one session
+    * keep exactly ONE copy of the versioned state on disk. The returned
     * DataFrame reads from this dir, so it must survive the invocation —
     * deletion happens on the NEXT run, never eagerly. */
-  private def replayDir(name: String): String = {
-    val p = java.nio.file.Paths.get("target", "replay", name)
+  private[queries] def replayDir(s: SparkSession, name: String): String = {
+    val p = java.nio.file.Paths.get(
+      new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")).toUri.getPath,
+      "replay", name)
     def del(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(del)
       f.delete(); ()
@@ -341,7 +344,7 @@ object Ingest {
           sum(when(col("l_returnflag") === "R", 1).otherwise(0)).cast("long")
             .as("n_returned"),
           floor(max(col("l_extendedprice"))).cast("long").as("max_price"))
-      val work = replayDir("gold")
+      val work = replayDir(s, "gold")
       val m = new graft.streaming.GoldMaintainer(s, "l_orderkey", work, gold)
       m.init(li.filter(col("l_orderkey") % 4 === 0))
       m.applyBatch(li.filter(col("l_orderkey") % 4 === 1))
@@ -397,7 +400,7 @@ object Ingest {
       def gold(fact: DataFrame): DataFrame = fact.groupBy(col("l_orderkey"))
         .agg(count(lit(1)).as("n_items"),
           sum(col("qty")).cast("long").as("qty_tot"))
-      val work = replayDir("metrics")
+      val work = replayDir(s, "metrics")
       val m = new graft.streaming.GoldMaintainer(s, "l_orderkey", work, gold,
         trackMetrics = true)
       m.init(li.filter(col("l_orderkey") % 4 === 0))
@@ -442,7 +445,7 @@ object Ingest {
         FROM rn GROUP BY w HAVING count(*) >= 2
       """)) { (s, dir) =>
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val work = replayDir("index")
+      val work = replayDir(s, "index")
       val m = new graft.streaming.IndexMaintainer(s, work)
       m.init(docs.filter(col("doc_id") % 3 === 0))
       m.applyBatch(docs.filter(col("doc_id") % 3 === 1))
@@ -541,7 +544,7 @@ object Ingest {
       val variants = docs.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 10000).as("doc_id"),
           regexp_replace(col("text"), "^(\\w+ ){3}", "").as("text"))
-      val work = replayDir("lshadmit")
+      val work = replayDir(s, "lshadmit")
       val m = new graft.streaming.LshAdmitMaintainer(s, work)
       m.init(docs.filter(col("doc_id") % 3 === 0))
       m.applyBatch(docs.filter(col("doc_id") % 3 === 1))
@@ -594,7 +597,7 @@ object Ingest {
                COALESCE(la.qty_tot, 0) AS qty_tot
         FROM silver s LEFT JOIN la ON s.pk = la.l_orderkey
       """)) { (s, dir) =>
-      val work = replayDir("pipeline")
+      val work = replayDir(s, "pipeline")
       val (report, _) =
         graft.Pipeline.runMaster(s, dir, work, sleeper = _ => ())
       require(report.acquired && report.succeeded,

@@ -30,10 +30,12 @@ import org.apache.spark.sql.functions._
   */
 object IndexMaintain {
 
+  private def tokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+
   /** Tokenize documents(doc_id, text) to the postings grain. */
   def postings(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("tf"))
+    tokens(docs).groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("tf"))
 
   /** The ir1-shaped index: term, df, cf, tf-impact-ordered top-3
     * posting head; terms with df < minDf dropped. */
@@ -50,85 +52,48 @@ object IndexMaintain {
       .select(col("w").as("term"), col("df"), col("cf"), col("posting_head"))
   }
 
-  /** Splice a delta batch (new + whole-document-replaced docs) into the
-    * postings state. The base side is only ever anti-joined against the
-    * (broadcastable) delta doc-id set — no base shuffle. */
-  def splicePostings(base: DataFrame, deltaDocs: DataFrame): DataFrame = {
-    val deltaIds = deltaDocs.select(col("doc_id")).distinct()
+  /** Splice a delta batch (new + whole-document-replaced docs; one row
+    * per doc_id) into the postings state. The base side is only ever
+    * anti-joined against the (broadcastable) delta doc-id set — no base
+    * shuffle. */
+  def splicePostings(base: DataFrame, deltaDocs: DataFrame): DataFrame =
     // re-select: the USING join hoists doc_id to the front; keep the
     // postings grain's canonical (w, doc_id, tf) order
-    base.join(broadcast(deltaIds), Seq("doc_id"), "left_anti")
+    base.join(broadcast(deltaDocs.select(col("doc_id"))), Seq("doc_id"), "left_anti")
       .select(col("w"), col("doc_id"), col("tf"))
       .unionByName(postings(deltaDocs))
-  }
 
-  /** Refresh the index given the OLD postings state and the delta batch.
-    * Returns (new postings state, new index). Only affected terms'
-    * index rows are recomputed. */
-  /** @param materializePostings hook applied to the spliced postings —
-    *   the maintainer passes its versioned-state write here, so the
-    *   splice chain (base anti-join + delta tokenize/aggregate) executes
-    *   exactly once and later consumers scan the written state instead of
-    *   re-running the chain (measured: three ~33-task re-executions per
-    *   batch in st_index_replay_parity). Default identity keeps the
-    *   pure-function shape for one-shot callers.
-    * @param materializeIndex same hook for the refreshed index. When both
-    *   hooks write, the two jobs run CONCURRENTLY (guide §2.6): the index
-    *   recompute no longer reads the materialized postings — its input is
-    *   derived independently as (base ▷ deltaIds) ⋉ affected ∪ deltaPost,
-    *   which equals newPostings ⋉ affected because the semi-join
-    *   distributes over the union and every deltaPost term is affected by
-    *   construction. Same per-batch scan count (one base-postings pass
-    *   each), no serial write → rescan → write chain. */
-  /** @param releaseCaches drop the per-batch caches (delta ids/postings,
-    *   affected terms) once both materialize hooks return. Pass true ONLY
-    *   when the hooks actually materialize (the maintainer's versioned
-    *   writes do): a long-lived maintainer otherwise leaks one storage
-    *   entry per table per batch. One-shot callers with identity hooks
-    *   must keep false — their returned frames are lazy and still read
-    *   the caches when the caller's action finally runs. */
+  /** Terms whose index rows a delta batch changes: everything the
+    * replaced docs used to mention in `basePostings`, plus everything the
+    * delta docs mention now — both delta-bounded. A term may repeat:
+    * every consumer is a semi- or anti-join, and without a distinct the
+    * set is one narrow scan, no shuffle. */
+  def affectedTerms(basePostings: DataFrame, deltaDocs: DataFrame): DataFrame =
+    basePostings.join(broadcast(deltaDocs.select(col("doc_id"))), Seq("doc_id"), "left_semi")
+      .select(col("w"))
+      .unionByName(tokens(deltaDocs).select(col("w")))
+
+  /** The `affected` terms' index rows over the postings after the delta:
+    * terms that fall below `minDf` have no row. The recompute's window
+    * input is hash-partitioned by term over the session's parallelism:
+    * left to adaptive coalescing, a delta-sized input lands in one
+    * partition and the window's sort runs as a single task. */
+  def recompute(basePostings: DataFrame, deltaDocs: DataFrame,
+      affected: DataFrame, minDf: Int = 2): DataFrame =
+    buildIndex(splicePostings(basePostings, deltaDocs)
+      .join(broadcast(affected), Seq("w"), "left_semi")
+      .repartition(basePostings.sparkSession.sparkContext.defaultParallelism, col("w")), minDf)
+
+  /** Refresh the index given the OLD postings state and the delta batch
+    * (one row per doc_id). Returns (new postings state, new index). Only
+    * affected terms' index rows are recomputed; every other index row is
+    * kept as-is (broadcast anti join against the affected terms). */
   def refresh(basePostings: DataFrame, baseIndex: DataFrame,
-      deltaDocs: DataFrame, minDf: Int = 2,
-      materializePostings: DataFrame => DataFrame = identity,
-      materializeIndex: DataFrame => DataFrame = identity,
-      releaseCaches: Boolean = false): (DataFrame, DataFrame) = {
-    // cached: the id set feeds THREE broadcasts (postings anti-join,
-    // affected-term semi-join, splice anti-join) and exchange reuse does
-    // not always unify separately-planned broadcast builds of the same
-    // distinct — without the cache each one re-runs the delta groupBy
-    val deltaIds = deltaDocs.select(col("doc_id")).distinct().cache()
-    // tokenize the delta ONCE (cached — delta-bounded by definition):
-    // both the postings splice and the affected-term set read it
-    val deltaPost = postings(deltaDocs).cache()
-    def baseKept = basePostings
-      .join(broadcast(deltaIds), Seq("doc_id"), "left_anti")
-      .select(col("w"), col("doc_id"), col("tf"))
-    // affected terms: everything the replaced docs used to mention plus
-    // everything the delta mentions now — both delta-bounded. Cached:
-    // it feeds TWO broadcast builds (recompute semi-join, untouched
-    // anti-join) planned as separate jobs, each of which would otherwise
-    // re-run the base-postings semi-join scan and the distinct shuffle.
-    val affected = basePostings
-      .join(broadcast(deltaIds), Seq("doc_id"), "left_semi").select(col("w"))
-      .unionByName(deltaPost.select(col("w")))
-      .distinct().cache()
-    val recomputed = buildIndex(
-      baseKept.join(broadcast(affected), Seq("w"), "left_semi")
-        .unionByName(deltaPost), minDf)
+      deltaDocs: DataFrame, minDf: Int = 2): (DataFrame, DataFrame) = {
+    val affected = affectedTerms(basePostings, deltaDocs)
     val untouched = baseIndex.join(
       broadcast(affected.select(col("w").as("term"))), Seq("term"), "left_anti")
-    try {
-      val Seq(newPostings, newIndex) = graft.core.Par.run(
-        () => materializePostings(baseKept.unionByName(deltaPost)),
-        () => materializeIndex(untouched.unionByName(recomputed)))
-      (newPostings, newIndex)
-    } finally if (releaseCaches) {
-      // both writes have materialized (or failed) — the per-batch caches
-      // must not outlive the batch, or a long-lived maintainer leaks one
-      // storage entry per table per applied batch
-      deltaIds.unpersist(blocking = false)
-      deltaPost.unpersist(blocking = false)
-      affected.unpersist(blocking = false)
-    }
+    (splicePostings(basePostings, deltaDocs),
+      untouched.unionByName(recompute(basePostings, deltaDocs, affected, minDf)))
   }
 }

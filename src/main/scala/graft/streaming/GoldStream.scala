@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.gold.GoldIncremental
-
 /** Streaming incremental MV maintenance (SURVEY.md §3.2 + §4): the
   * reference rebuilds its gold MVs wholesale on a schedule; here a
   * Structured Streaming `foreachBatch` sink applies each micro-batch of
@@ -16,10 +14,15 @@ import graft.gold.GoldIncremental
   * every parent it touches (the child-replace S8 semantics — the
   * reference's ingestion emits whole parents, not row diffs).
   *
-  * State lives in versioned parquet directories and is read back after
-  * every write: no pinned executor memory, lineage truncated at each
-  * batch boundary, and the same pattern drops onto a transactional
-  * table format (Delta/Iceberg MERGE) unchanged at cluster scale.
+  * State is two keyed tables in [[KeyedVersions]] delta layout, fact and
+  * gold, sharing one key set per version: the batch's parents.
+  * A batch version holds the batch itself as the fact segment and
+  * `buildGold(batch)` as the gold segment — the contract makes the batch
+  * the complete child set of each parent it names, so the recompute
+  * needs no read of the prior state. The three writes run concurrently
+  * and no state table is rewritten; reads merge the last full version
+  * with the later segments, and every few tens of batches a fold writes
+  * the merged state as a new full version.
   */
 final class GoldMaintainer(
     spark: SparkSession,
@@ -28,29 +31,19 @@ final class GoldMaintainer(
     buildGold: DataFrame => DataFrame,
     trackMetrics: Boolean = false) {
 
-  private var version = 0
-  // Memoized read-back frames, set at write time with the write schema
-  // pinned (VersionedState.writeRead): re-opening state with
-  // spark.read.parquet costs a footer-inference job per call, and the
-  // replay gates re-open fact/gold dozens of times per run.
-  private var factDf: DataFrame = _
-  private var goldDf: DataFrame = _
+  private val state = new KeyedVersions(spark, workDir, Seq(
+    KeyedVersions.Table("fact", parentKey, "keys"),
+    KeyedVersions.Table("gold", parentKey, "keys")))
 
   /** Per-batch throughput/state metrics (SURVEY §2.11 A13 ≅
     * StreamingQueryListener progress): rows processed, keys touched, and
-    * the maintained state sizes after each batch. Off by default — the
-    * counts are extra actions the hot path should not pay unless asked.
-    * State sizes come from the just-written parquet footers
-    * (VersionedState.rowCount) — metadata, not a scan job. Oracle-gated
-    * by st_metrics_parity. */
+    * the maintained state sizes after each batch. Off by default: a delta
+    * version's footers hold only the batch, so the counts take one action
+    * per batch over the batch and the merged state, spent only when
+    * metrics are on. Init's counts are its footers. Oracle-gated by
+    * st_metrics_parity. */
   private val metricsBuf =
     scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Long, Long)]()
-
-  private def record(batchId: Int, rowsIn: Long, keysTouched: Long): Unit =
-    if (trackMetrics)
-      metricsBuf += ((batchId, rowsIn, keysTouched,
-        VersionedState.rowCount(spark, factPath(version)),
-        VersionedState.rowCount(spark, goldPath(version))))
 
   /** (batch_id, rows_in, keys_touched, state_rows, gold_rows) per applied
     * batch, init included as batch 0. */
@@ -61,92 +54,62 @@ final class GoldMaintainer(
       .toDF("batch_id", "rows_in", "keys_touched", "state_rows", "gold_rows")
   }
 
-  private def factPath(v: Int) = s"$workDir/fact_v$v"
-  private def goldPath(v: Int) = s"$workDir/gold_v$v"
-
   /** Seed v0 from the initial fact state; builds the initial gold. Both
     * writes run CONCURRENTLY (guide §2.6): the gold build reads the same
     * lazy seed frame the fact write persists — one source scan each,
     * same total I/O as write-then-rescan, but the two job chains overlap
     * instead of serializing on a mostly-idle session. */
   def init(fact0: DataFrame): Unit = synchronized {
-    VersionedState.dropVersions(workDir, "fact", "gold")
-    val Seq(f, g) = graft.core.Par.run(
-      () => VersionedState.writeRead(fact0, factPath(0)),
-      () => VersionedState.writeRead(buildGold(fact0), goldPath(0)))
-    factDf = f
-    goldDf = g
-    version = 0
+    state.init("fact" -> fact0, "gold" -> buildGold(fact0))
     metricsBuf.clear()
     if (trackMetrics) {
       // batch 0 = init: rows_in is the seeded fact size, keys_touched its
       // distinct parents (== gold rows); both are footer metadata.
-      val n = VersionedState.rowCount(spark, factPath(0))
-      record(0, n, VersionedState.rowCount(spark, goldPath(0)))
+      val n = VersionedState.rowCount(spark, state.path("fact", 0))
+      val g = VersionedState.rowCount(spark, state.path("gold", 0))
+      metricsBuf += ((0, n, g, n, g))
     }
   }
 
-  def fact: DataFrame = synchronized {
-    if (factDf == null) factDf = spark.read.parquet(factPath(version))
-    factDf
-  }
-  def gold: DataFrame = synchronized {
-    if (goldDf == null) goldDf = spark.read.parquet(goldPath(version))
-    goldDf
-  }
+  def fact: DataFrame = synchronized { state.read("fact") }
+  def gold: DataFrame = synchronized { state.read("gold") }
 
-  /** Resume from the latest fully-committed (fact AND gold) version on
-    * disk; a torn version from a crash between the two writes is skipped. */
-  def recover(): Int = synchronized {
-    version = VersionedState.latestCommitted(workDir, Seq("fact", "gold"))
-      .getOrElse(throw new IllegalStateException(
-        s"no committed gold state under $workDir"))
-    factDf = null; goldDf = null // re-open lazily from the recovered version
-    version
-  }
+  /** Resume from the latest committed version on disk; a torn version
+    * from a crash inside a batch is skipped. */
+  def recover(): Int = synchronized { state.recover() }
 
-  /** One micro-batch: child-replace the touched parents in the fact
-    * state, then splice ONLY those parents' recomputed gold rows. */
+  /** One micro-batch: the batch replaces its parents' children in the
+    * fact state, and their recomputed gold rows replace theirs. */
   def applyBatch(batch0: DataFrame): Unit = synchronized {
-    // persist the micro-batch ONCE: the splice reads it several times
-    // (key set, fact union, metrics), and an un-cached foreachBatch frame
-    // re-scans its source on every action — measured 5× the input rows
-    // in the listener's numInputRows before this cache
+    // persist the micro-batch ONCE: all three writes read it, and an
+    // un-cached foreachBatch frame re-scans its source on every action —
+    // measured 5× the input rows in the listener's numInputRows before
+    // this cache
     val batch = batch0.persist()
     try {
-      // ONE job surfaces both counts the batch needs (row count for the
-      // empty-batch gate, distinct-parent count for the refresh's
-      // adaptive join budget + metrics) instead of two.
-      val hdr = batch.agg(count(lit(1)), count_distinct(col(parentKey))).head()
-      val rowsIn = hdr.getLong(0)
-      if (rowsIn == 0) return
-      val nKeys = hdr.getLong(1)
-      val prevFact = fact
-      val prevGold = gold
-      val keys = batch.select(col(parentKey)).distinct()
-      val next = version + 1
-      val batchCols = batch.select(prevFact.columns.map(col).toIndexedSeq: _*)
-      // The gold recompute's input is provably the batch itself, no fact
-      // re-read needed: newFact ⋉ keys = ((prevFact ▷ keys) ∪ batch) ⋉ keys
-      // = batch (the anti-join leaves no keyed rows to match). That both
-      // removes a per-batch scan of the fact state AND breaks the
-      // fact-write → gold-write dependency, so the two writes run
-      // CONCURRENTLY (guide §2.6) — the replay gates' profiles were long
-      // serial chains of 1-4-task jobs on an idle 32-core session.
-      val Seq(newFact, newGold) = graft.core.Par.run(
-        () => VersionedState.writeRead(
-          prevFact.join(keys, Seq(parentKey), "left_anti")
-            .unionByName(batchCols),
-          factPath(next)),
-        () => VersionedState.writeRead(
-          GoldIncremental.refresh(prevGold, keys, parentKey, Some(nKeys)) { ks =>
-            buildGold(batchCols.join(ks, Seq(parentKey), "left_semi"))
-          }, goldPath(next)))
-      factDf = newFact
-      goldDf = newGold
-      version = next
-      if (trackMetrics) record(next, rowsIn, nKeys)
-    } finally batch.unpersist(blocking = false)
+      val next = state.begin()
+      val rows = batch.select(state.schema("fact").fieldNames.map(col).toIndexedSeq: _*)
+      // a parent may repeat: the key set is only ever anti-joined, and
+      // without a distinct its write is one narrow job
+      val keys = rows.select(col(parentKey))
+      graft.core.Par.run(
+        () => next.write("fact", rows, keys),
+        () => next.write("gold", buildGold(rows), keys),
+        () => next.writeKeys("keys", keys))
+      // an empty batch leaves no version: the uncommitted directories are
+      // cleared by the next begin()
+      if (VersionedState.rowCount(spark, state.path("keys", next.v)) == 0) return
+      next.commit()
+      if (trackMetrics) {
+        // one action: the batch's rows and distinct parents, and the
+        // merged fact and gold sizes
+        val c = rows.agg(count(lit(1)), count_distinct(col(parentKey)))
+          .crossJoin(fact.agg(count(lit(1))))
+          .crossJoin(gold.agg(count(lit(1))))
+          .head()
+        metricsBuf += ((next.v, c.getLong(0), c.getLong(1), c.getLong(2), c.getLong(3)))
+      }
+    } finally { batch.unpersist(blocking = false); () }
   }
 
   /** Attach to a streaming delta source; each micro-batch maintains the

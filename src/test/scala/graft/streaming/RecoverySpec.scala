@@ -79,4 +79,56 @@ class RecoverySpec extends SparkTestBase {
     assert(sameRows(b.gold, a.gold))
     assert(sameRows(b.fact, a.fact))
   }
+
+  test("torn delta versions: recovery lands on the previous version; re-applying equals one application") {
+    def rm(work: String, path: String): Unit =
+      VersionedState.deleteRec(new java.io.File(work, path))
+
+    // gold: both row tables committed, one marker written, key set missing
+    val gw = java.nio.file.Files.createTempDirectory("graft-recover-torn-gold").toString
+    val li = graft.core.Tables(spark, sf0001, "lineitem")
+      .select(col("l_orderkey").as("k"), col("l_quantity").cast("long").as("v"))
+    def buildGold(fact: org.apache.spark.sql.DataFrame) =
+      fact.groupBy(col("k")).agg(sum(col("v")).as("total"))
+    val fact0 = li.filter(col("k") % 4 === 0)
+    val b1 = li.filter(col("k") === 4L).withColumn("v", col("v") + 1)
+    val b2 = li.filter(col("k") === 8L || col("k") === 9L).withColumn("v", col("v") * 2)
+    val g = new GoldMaintainer(spark, "k", gw, buildGold)
+    g.init(fact0)
+    g.applyBatch(b1)
+    g.applyBatch(b2)
+    assert(new java.io.File(gw, "fact_v2/_DELTA").exists, "batch 2 must be a delta version")
+    rm(gw, "keys_v2")
+    rm(gw, "gold_v2/_DELTA")
+    val g2 = new GoldMaintainer(spark, "k", gw, buildGold)
+    assert(g2.recover() == 1)
+    g2.applyBatch(b2)
+    val once = Seq(b1, b2).foldLeft(fact0) { (f, b) =>
+      f.join(b.select("k").distinct(), Seq("k"), "left_anti").unionByName(b)
+    }
+    assert(sameRows(g2.fact, once))
+    assert(sameRows(g2.gold, buildGold(once)))
+
+    // index: postings and both key sets committed, the sibling index
+    // table missing
+    val iw = java.nio.file.Files.createTempDirectory("graft-recover-torn-ix").toString
+    val corpus0 = (0 until 40).map(i => i.toLong ->
+      (0 until 4).map(j => s"w${(i * 5 + j * 3) % 17}").mkString(" "))
+    val d1 = Seq((3L, "w1 w2 fresh"))
+    val d2 = Seq((5L, "w3 fresh again"), (40L, "w4 w5"))
+    val a = new IndexMaintainer(spark, iw)
+    a.init(corpus0.toDF("doc_id", "text"))
+    a.applyBatch(d1.toDF("doc_id", "text"))
+    a.applyBatch(d2.toDF("doc_id", "text"))
+    assert(new java.io.File(iw, "postings_v2/_DELTA").exists, "batch 2 must be a delta version")
+    rm(iw, "index_v2")
+    rm(iw, "postings_v2/_DELTA")
+    val b = new IndexMaintainer(spark, iw)
+    assert(b.recover() == 1)
+    b.applyBatch(d2.toDF("doc_id", "text"))
+    val finalCorpus = (corpus0.toMap ++ d1 ++ d2).toSeq.toDF("doc_id", "text")
+    assert(sameRows(b.postingsState, IndexMaintain.postings(finalCorpus)))
+    assert(sameRows(b.index,
+      IndexMaintain.buildIndex(IndexMaintain.postings(finalCorpus))))
+  }
 }
